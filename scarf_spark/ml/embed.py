@@ -223,24 +223,30 @@ def umap_layout_driver(
     deterministic-twin envelope as the base layout."""
     import numpy as np
 
+    from scarf_spark.sources.sinks import lookup_sorted
+
+    # the layout depends on edge order: toPandas keeps collect
+    # (partition) order, so the SGD loop is reproducible
     cols = ["src", "dst", "weight"] + ([input_dist] if input_dist else [])
-    e_rows = edges.select(*cols).collect()
-    i_rows = init.select("cell_id", "ix", "iy").collect()
-    ids = sorted({r["cell_id"] for r in i_rows})
-    idx = {n: i for i, n in enumerate(ids)}
+    e = edges.select(*cols).toPandas()
+    ini = init.select("cell_id", "ix", "iy").toPandas()
+    ids = np.unique(ini["cell_id"].to_numpy())
     pos = np.zeros((len(ids), 2))
-    for r in i_rows:
-        pos[idx[r["cell_id"]]] = (r["ix"], r["iy"])
-    keep = [r for r in e_rows if r["src"] in idx and r["dst"] in idx]
-    src = np.array([idx[r["src"]] for r in keep])
-    dst = np.array([idx[r["dst"]] for r in keep])
-    w = np.array([r["weight"] for r in keep], dtype=float)
+    pos[np.searchsorted(ids, ini["cell_id"].to_numpy())] = ini[["ix", "iy"]].to_numpy(
+        dtype=float
+    )
+    # edges with an endpoint outside init are dropped
+    src, s_ok = lookup_sorted(ids, e["src"].to_numpy())
+    dst, d_ok = lookup_sorted(ids, e["dst"].to_numpy())
+    keep = s_ok & d_ok
+    src, dst = src[keep], dst[keep]
+    w = e["weight"].to_numpy(dtype=float)[keep]
     rng = np.random.default_rng(seed)
     n = len(ids)
     t_in = None
     if dens_lambda > 0 and input_dist is not None:
         # standardized log input-space local radius — the densMAP target
-        din2 = np.array([float(r[input_dist]) ** 2 for r in keep])
+        din2 = e[input_dist].to_numpy(dtype=float)[keep] ** 2
         W = np.zeros(n)
         np.add.at(W, src, w)
         W = np.maximum(W, 1e-12)
@@ -279,7 +285,7 @@ def umap_layout_driver(
     spark = edges.sparkSession
     return spark.createDataFrame(
         [(int(nid), round(float(pos[i, 0]), 6), round(float(pos[i, 1]), 6))
-         for nid, i in idx.items()],
+         for i, nid in enumerate(ids)],
         ["cell_id", "umap1", "umap2"],
     )
 

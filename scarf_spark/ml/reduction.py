@@ -2,10 +2,12 @@
 
 Reference: streaming IncrementalPCA / gensim LSI over chunks with
 z-scaling, then a reducer applied chunkwise
-(``ann.py:129-162``). Spark-first shape: MLlib's distributed PCA on
-assembled vectors (z-scaled via StandardScaler semantics), with the
-loadings broadcast back for the projection step — the projection is
-embarrassingly parallel exactly like the reference's per-chunk matmul.
+(``ann.py:129-162``). Spark-first shape: the moments (n, Σv, VᵀV) of
+the assembled vectors come from one Arrow-batched BLAS pass, the
+z-scaling and the Gram eigendecomposition run on the driver, and the
+loadings are broadcast back for the projection step — the projection
+is embarrassingly parallel exactly like the reference's per-chunk
+matmul.
 
 The reference discards one extra fitted component (``ann.py:212-214``)
 and optionally drops the first LSI component (depth, ``ann.py:286``);
@@ -27,11 +29,12 @@ def _dlit(x: float) -> str:
     decimal literal parses as DECIMAL.
 
     Why strings at all: building the reduction family's wide
-    expressions (d(d+1)/2 Gram terms, d-term projections) as Column
-    objects costs one py4j round trip per operator node — measured
-    2.8s of driver time for the d=20 Gram against 0.1s for one parsed
-    SQL string (guide §7.3: plan construction as the bottleneck). The
-    parsed plan is expression-identical, verified bit-equal."""
+    expressions (d-term z-scores and projections) as Column objects
+    costs one py4j round trip per operator node — measured 2.8s of
+    driver time for a d=20 wide expression list against 0.1s for one
+    parsed SQL string (guide §7.3: plan construction as the
+    bottleneck). The parsed plan is expression-identical, verified
+    bit-equal."""
     import math
 
     v = float(x)
@@ -71,34 +74,69 @@ def assemble_vectors(
     )
 
 
-def zscore_vectors(cells_vec: DataFrame, d: int | None = None) -> DataFrame:
-    """Column-wise z-scaling of assembled vectors (``ann.py:191-192``),
-    computed from two array-aggregates (elementwise sum / sumsq via
-    zip_with folds) broadcast back — no per-column shuffle.
+def _gram_moments(cells_vec: DataFrame, d: int):
+    """One Arrow-batched pass over ``v``: each partition folds its row
+    count, column sums Σv and second moments VᵀV with numpy BLAS, and
+    the driver adds the per-partition partials in collect (partition)
+    order — a fixed summation order, so repeated calls are bit-equal.
+    p × (d² + d + 1) doubles cross to the driver, independent of n.
 
-    ``d`` skips the one-row dimension-probe action when the caller
-    already knows the vector width (it always does when the vectors
-    came from :func:`assemble_vectors` over an explicit feature
-    list)."""
-    if d is None:
-        d = cells_vec.select(F.size("v").alias("d")).limit(1).collect()[0]["d"]
-    stats = cells_vec.selectExpr(
-        "count(*) AS n",
-        *[f"sum(v[{i}]) AS s{i}" for i in range(d)],
-        *[f"sum(v[{i}] * v[{i}]) AS q{i}" for i in range(d)],
+    Replaces the d(d+1)/2-column ``sum(v[i] * v[j])`` SQL aggregate:
+    one BLAS call per Arrow batch against a wide codegen'd aggregate
+    (measured 1.0–1.4 s per call at 600 × 30 on 4 vCPUs, where the
+    Arrow round trip alone is ~0.03 s). Returns (n, sums, gram) with
+    ``gram`` exactly symmetric (upper triangle mirrored)."""
+    import numpy as np
+    import pandas as pd
+
+    def fold(batches):
+        n = 0
+        s = np.zeros(d)
+        g = np.zeros((d, d))
+        for pdf in batches:
+            if len(pdf):
+                x = np.stack(pdf["v"].to_numpy()).astype(np.float64, copy=False)
+                n += len(x)
+                s += x.sum(axis=0)
+                g += x.T @ x
+        yield pd.DataFrame({"n": [n], "s": [s], "g": [g.ravel()]})
+
+    parts = (
+        cells_vec.select("v")
+        .mapInPandas(fold, "n long, s array<double>, g array<double>")
+        .collect()
     )
+    n = 0
+    s = np.zeros(d)
+    g = np.zeros((d, d))
+    for r in parts:
+        n += r["n"]
+        s += np.asarray(r["s"], dtype=np.float64)
+        g += np.asarray(r["g"], dtype=np.float64).reshape(d, d)
+    g = np.triu(g) + np.triu(g, 1).T
+    return n, s, g
+
+
+def _zscore_params(n: int, s, g, d: int):
+    """(mu, sd) lists from the collected moments. math.sqrt (not
+    **0.5) so the SQL oracle's SQRT replays the same correctly-rounded
+    operation; mu*mu (not mu**2) for the same reason. Shared by
+    :func:`zscore_vectors` and :func:`zscore_gram`, so both emit the
+    identical z expressions."""
     import math
 
-    r = stats.collect()[0]
-    n = float(r["n"])
-    mu = [r[f"s{i}"] / n for i in range(d)]
-    # math.sqrt (not **0.5) so the SQL oracle's SQRT replays the same
-    # correctly-rounded operation; mu*mu (not mu**2) for the same reason
+    nf = float(n)
+    mu = [float(s[i]) / nf for i in range(d)]
     sd = [
-        math.sqrt(max(r[f"q{i}"] / n - mu[i] * mu[i], 1e-12)) for i in range(d)
+        math.sqrt(max(float(g[i, i]) / nf - mu[i] * mu[i], 1e-12))
+        for i in range(d)
     ]
+    return mu, sd
+
+
+def _zscored(cells_vec: DataFrame, mu, sd) -> DataFrame:
     z = ", ".join(
-        f"(v[{i}] - {_dlit(mu[i])}) / {_dlit(sd[i])}" for i in range(d)
+        f"(v[{i}] - {_dlit(m)}) / {_dlit(s)}" for i, (m, s) in enumerate(zip(mu, sd))
     )
     # lazy checkpoint for the same reason as assemble_vectors: callers
     # consume z once per Gram/probe/projection pass
@@ -107,34 +145,40 @@ def zscore_vectors(cells_vec: DataFrame, d: int | None = None) -> DataFrame:
     )
 
 
-def zscore_gram(cells_vec: DataFrame, d: int):
-    """Fused z-score + z-Gram: ONE aggregate over the assembled
-    vectors collects n, the per-dim sums, and the raw upper-triangle
-    second moments; the z-score parameters (identical float
-    expressions to :func:`zscore_vectors`, so z itself is bit-equal)
-    and the Gram of the z-scored matrix (expanded analytically from
-    the raw moments — the ~1e-14 divergence from a summed z-Gram
-    shifts the Jacobi loadings below the ROUND(6) pivot every
-    consumer applies) both derive on the driver. One data pass and
-    one action where the zscore_vectors → pca_fit chain took two of
-    each. Returns (z DataFrame, gram list-of-rows, n)."""
-    import math
+def _vec_dim(cells_vec: DataFrame) -> int:
+    return cells_vec.select(F.size("v").alias("d")).limit(1).collect()[0]["d"]
 
-    cols = ["count(*) AS n"]
-    cols += [f"sum(v[{i}]) AS s{i}" for i in range(d)]
-    cols += [
-        f"sum(v[{i}] * v[{j}]) AS q{i}_{j}"
-        for i in range(d)
-        for j in range(i, d)
-    ]
-    r = cells_vec.selectExpr(*cols).collect()[0]
-    n = r["n"]
+
+def zscore_vectors(cells_vec: DataFrame, d: int | None = None) -> DataFrame:
+    """Column-wise z-scaling of assembled vectors (``ann.py:191-192``):
+    mean and standard deviation from one Arrow-batched moment pass
+    (:func:`_gram_moments`), applied as a broadcast-literal expression
+    — no per-column shuffle.
+
+    ``d`` skips the one-row dimension-probe action when the caller
+    already knows the vector width (it always does when the vectors
+    came from :func:`assemble_vectors` over an explicit feature
+    list)."""
+    if d is None:
+        d = _vec_dim(cells_vec)
+    n, s, g = _gram_moments(cells_vec, d)
+    return _zscored(cells_vec, *_zscore_params(n, s, g, d))
+
+
+def zscore_gram(cells_vec: DataFrame, d: int):
+    """Fused z-score + z-Gram: ONE Arrow-batched moment pass
+    (:func:`_gram_moments`) over the assembled vectors yields n, the
+    per-dim sums and the raw second moments VᵀV; the z-score
+    parameters (the same expressions as :func:`zscore_vectors`, so z
+    itself is bit-equal) and the Gram of the z-scored matrix (expanded
+    analytically from the raw moments — the ~1e-14 divergence from a
+    summed z-Gram shifts the Jacobi loadings below the ROUND(6) pivot
+    every consumer applies) both derive on the driver. One data pass
+    where the zscore_vectors → pca_fit chain takes two. Returns
+    (z DataFrame, gram list-of-rows, n)."""
+    n, s, g = _gram_moments(cells_vec, d)
+    mu, sd = _zscore_params(n, s, g, d)
     nf = float(n)
-    mu = [r[f"s{i}"] / nf for i in range(d)]
-    sd = [
-        math.sqrt(max(r[f"q{i}_{i}"] / nf - mu[i] * mu[i], 1e-12))
-        for i in range(d)
-    ]
     gram = [[0.0] * d for _ in range(d)]
     for i in range(d):
         for j in range(i, d):
@@ -142,39 +186,23 @@ def zscore_gram(cells_vec: DataFrame, d: int):
             # actual collected sums (not n·μ identities) to keep the
             # cancellation error at its floor
             cent = (
-                r[f"q{i}_{j}"]
-                - mu[j] * r[f"s{i}"]
-                - mu[i] * r[f"s{j}"]
+                float(g[i, j])
+                - mu[j] * float(s[i])
+                - mu[i] * float(s[j])
                 + nf * mu[i] * mu[j]
             )
-            g = cent / (sd[i] * sd[j])
-            gram[i][j] = g
-            gram[j][i] = g
-    z = ", ".join(
-        f"(v[{i}] - {_dlit(mu[i])}) / {_dlit(sd[i])}" for i in range(d)
-    )
-    zdf = cells_vec.selectExpr(
-        "cell_id", f"array({z}) AS v"
-    ).localCheckpoint(eager=False)
+            gram[i][j] = gram[j][i] = cent / (sd[i] * sd[j])
+    zdf = _zscored(cells_vec, mu, sd)
     # Cancellation-regime guard (r15 ADVICE): the four-term expansion
     # subtracts terms of size ~n·μ², so the centered moment loses about
     # (μ/sd)² ULPs — at μ/sd = O(1) (any counts-derived matrix; all
     # fixture consumers) that is the documented ~1e-14 drift, but an
     # extreme-offset input could push it past the ROUND(6) pivot. In
-    # that regime recompute the Gram with an explicit second pass over
-    # the z-scored values (the pre-r15 two-pass shape, immune by
-    # construction): one extra aggregate, paid only when the analytic
-    # path is actually unsafe.
+    # that regime recompute the Gram with an explicit second moment
+    # pass over the z-scored values (the two-pass shape, immune by
+    # construction), paid only when the analytic path is unsafe.
     if any(abs(mu[i]) / sd[i] > 1e4 for i in range(d)):
-        gcols = [
-            f"sum(v[{i}] * v[{j}]) AS q{i}_{j}"
-            for i in range(d)
-            for j in range(i, d)
-        ]
-        r2 = zdf.selectExpr(*gcols).collect()[0]
-        for i in range(d):
-            for j in range(i, d):
-                gram[i][j] = gram[j][i] = r2[f"q{i}_{j}"]
+        gram = _gram_moments(zdf, d)[2].tolist()
     return zdf, gram, n
 
 
@@ -235,28 +263,20 @@ def pca_fit(
     drop_first: bool = False,
     d: int | None = None,
 ):
-    """Distributed PCA via the Gram matrix: X'X is a d×d aggregate
-    (one pass, d = |HVG| is small by construction), eigendecomposed on
-    the driver with the deterministic :func:`jacobi_eigh` — no MLlib
-    RNG, and the whole fit is replayable in SQL (see the
-    ``ml_pca_project`` oracle). Returns (loadings ndarray d×k,
-    explained_variance list).
+    """Distributed PCA via the Gram matrix: X'X is a d×d sum of
+    per-partition BLAS products (:func:`_gram_moments`, one
+    Arrow-batched pass; d = |HVG| is small by construction),
+    eigendecomposed on the driver with the deterministic
+    :func:`jacobi_eigh` — no MLlib RNG, and the whole fit is
+    replayable in SQL (see the ``ml_pca_project`` oracle). Returns
+    (loadings ndarray d×k, explained_variance list).
 
     drop_first mirrors the reference's LSI skip-first
     (``ann.py:286``)."""
     if d is None:
-        d = cells_vec.select(F.size("v").alias("d")).limit(1).collect()[0]["d"]
-    gram_cols = [
-        f"sum(v[{i}] * v[{j}]) AS g_{i}_{j}"
-        for i in range(d)
-        for j in range(i, d)
-    ]
-    row = cells_vec.selectExpr("count(*) AS n", *gram_cols).collect()[0]
-    n = row["n"]
-    gram = [
-        [row[f"g_{min(i, j)}_{max(i, j)}"] for j in range(d)] for i in range(d)
-    ]
-    return pca_fit_gram(gram, n, k=k, drop_first=drop_first)
+        d = _vec_dim(cells_vec)
+    n, _s, g = _gram_moments(cells_vec, d)
+    return pca_fit_gram(g.tolist(), n, k=k, drop_first=drop_first)
 
 
 def pca_fit_gram(gram, n: int, k: int = 5, drop_first: bool = False):
@@ -335,7 +355,7 @@ def mahalanobis_scores(
     one projection expression per vector — the same scale envelope as
     PCA itself. Returns (cell_id, m2)."""
     if d is None:
-        d = cells_vec.select(F.size("v").alias("d")).limit(1).collect()[0]["d"]
+        d = _vec_dim(cells_vec)
     # ``fit``: optional precomputed (loadings, evs) — callers holding a
     # fused-aggregate Gram (zscore_gram → pca_fit_gram) skip the
     # second data pass the internal fit would run
@@ -367,7 +387,7 @@ def zca_whiten(
     slot; eigenvalues floored at ``eps``. Returns
     (cell_id, slot, white) long-form, slot 1-based."""
     if d is None:
-        d = cells_vec.select(F.size("v").alias("d")).limit(1).collect()[0]["d"]
+        d = _vec_dim(cells_vec)
     # ``fit`` as in mahalanobis_scores: precomputed (loadings, evs)
     loadings, evs = fit if fit is not None else pca_fit(cells_vec, k=d, d=d)
     proj = pca_transform(cells_vec, loadings)

@@ -58,10 +58,19 @@ def auto_filter_bounds(df: DataFrame, col: str, n_std: float = 2.0) -> DataFrame
     computed as one global aggregate (the reference fits a Normal with
     scipy ppf; median±k·σ is the same family of derived threshold and
     keeps the whole plan in SQL)."""
-    return df.agg(
-        F.round(F.median(col) - n_std * F.stddev_samp(col), 6).alias("lo"),
-        F.round(F.median(col) + n_std * F.stddev_samp(col), 6).alias("hi"),
-    )
+    return df.agg(*auto_filter_bound_cols(col, n_std))
+
+
+def auto_filter_bound_cols(
+    col: str, n_std: float = 2.0, lo: str = "lo", hi: str = "hi"
+) -> list:
+    """The two aggregate columns of :func:`auto_filter_bounds`, named
+    ``lo``/``hi`` — lets a caller fold the bounds of several attributes
+    into one aggregate (one job instead of one per attribute)."""
+    return [
+        F.round(F.median(col) - n_std * F.stddev_samp(col), 6).alias(lo),
+        F.round(F.median(col) + n_std * F.stddev_samp(col), 6).alias(hi),
+    ]
 
 
 def auto_filter_cells(df: DataFrame, col: str, n_std: float = 2.0) -> DataFrame:

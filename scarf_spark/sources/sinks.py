@@ -2,8 +2,10 @@
 
 The reference streams chunks into Zarr or rebuilds CSR for AnnData
 (``scarf/writers.py:245-364``, ``writers.py:1113-1304``). Spark-first:
-writes are inherently chunked and distributed; the only driver-side
-piece is the constant-size MTX header.
+writes are inherently chunked and distributed; the driver-side pieces
+are the constant-size MTX header and the AnnData export, whose target
+is one in-memory object — its tables cross as Arrow batches
+(``toPandas``) and are ordered and densified in numpy.
 """
 
 from __future__ import annotations
@@ -103,54 +105,71 @@ def to_wide(counts: DataFrame, feat_ids: list[int], prefix: str = "f") -> DataFr
     return counts.groupBy("cell_id").agg(*aggs)
 
 
+def lookup_sorted(ids, values):
+    """Positions of ``values`` in the sorted, unique id array ``ids``
+    and a mask of the values actually present — the driver-side id
+    densification (``np.searchsorted``) that stands in for a
+    ``zipWithIndex`` job plus a join: absent values are masked out,
+    the way the inner join dropped them."""
+    import numpy as np
+
+    ids = np.asarray(ids)
+    values = np.asarray(values)
+    pos = np.searchsorted(ids, values)
+    found = pos < len(ids)
+    found[found] = ids[pos[found]] == values[found]
+    return pos, found
+
+
+def csr_from_coo(ci, fi, data, n_cells: int):
+    """CSR arrays (indptr, indices, data) from dense-index COO arrays,
+    rows ordered by (cell, feature) with ``np.lexsort``."""
+    import numpy as np
+
+    ci = np.asarray(ci, dtype=np.int64)
+    order = np.lexsort((fi, ci))
+    indptr = np.zeros(n_cells + 1, dtype=np.int64)
+    np.add.at(indptr[1:], ci, 1)
+    indptr = np.cumsum(indptr)
+    return (
+        indptr,
+        np.asarray(fi, dtype=np.int64)[order],
+        np.asarray(data, dtype=np.float64)[order],
+    )
+
+
 def coo_to_csr_arrays(counts: DataFrame, n_cells: int, n_feats: int):
     """Collect the COO table into CSR arrays (indptr, indices, data) —
     the reconstruction step of the reference's AnnData export
     (``writers.py:1113-1259`` to_h5ad; ``datastore.py:1118-1157``
     to_anndata). driver_compute by definition (the export target is a
-    single in-memory object); sorted (cell, feat) order is enforced so
-    the arrays are deterministic."""
-    import numpy as np
-
-    rows = (
-        counts.select("cell_id", "feat_id", "value")
-        .orderBy("cell_id", "feat_id")
-        .collect()
+    single in-memory object), so the table crosses as Arrow batches
+    (``toPandas``) and is ordered by (cell, feat) on the driver, which
+    keeps the arrays deterministic."""
+    pdf = counts.select("cell_id", "feat_id", "value").toPandas()
+    return csr_from_coo(
+        pdf["cell_id"].to_numpy(), pdf["feat_id"].to_numpy(),
+        pdf["value"].to_numpy(), n_cells,
     )
-    ci = np.fromiter((r["cell_id"] for r in rows), dtype=np.int64, count=len(rows))
-    fi = np.fromiter((r["feat_id"] for r in rows), dtype=np.int64, count=len(rows))
-    data = np.fromiter((r["value"] for r in rows), dtype=np.float64, count=len(rows))
-    indptr = np.zeros(n_cells + 1, dtype=np.int64)
-    np.add.at(indptr[1:], ci, 1)
-    indptr = np.cumsum(indptr)
-    return indptr, fi, data
 
 
-def to_h5ad(
-    counts: DataFrame,
-    cells: DataFrame,
-    feats: DataFrame,
-    path: str,
-    n_cells: int,
-    n_feats: int,
-) -> str:
-    """Export to an AnnData-compatible ``.h5ad`` (CSR X group + obs/var
-    tables, ``writers.py:1113-1259``). Uses h5py when installed;
-    otherwise the vendored pure-python HDF5 writer
-    (``sources/minih5.write_h5``), so the export runs un-gated."""
-    indptr, indices, data = coo_to_csr_arrays(counts, n_cells, n_feats)
+def _h5_columns(pdf) -> dict:
+    out = {}
+    for c in pdf.columns:
+        v = pdf[c].to_numpy()
+        out[c] = v.astype("S") if v.dtype.kind == "O" else v
+    return out
 
-    def _cols(df):
-        pdf = df.toPandas()
-        out = {}
-        for c in pdf.columns:
-            v = pdf[c].to_numpy()
-            out[c] = v.astype("S") if v.dtype.kind == "O" else v
-        return out
 
+def write_h5ad(path: str, indptr, indices, data, obs, var, n_cells: int, n_feats: int) -> str:
+    """Write CSR arrays plus ``obs``/``var`` tables (pandas frames,
+    already in matrix row / column order) as an AnnData-compatible
+    ``.h5ad``. Uses h5py when installed; otherwise the vendored
+    pure-python HDF5 writer (``sources/minih5.write_h5``), so the
+    export runs un-gated."""
     import numpy as np
 
-    obs, var = _cols(cells), _cols(feats)
+    obs, var = _h5_columns(obs), _h5_columns(var)
     # shape is written BOTH as the AnnData attr (h5py path) and as a
     # plain X/shape int64[2] dataset in both paths: the minih5 writer
     # has no attribute-message support, so without the dataset a
@@ -187,6 +206,34 @@ def to_h5ad(
             },
         )
     return path
+
+
+def to_h5ad(
+    counts: DataFrame,
+    cells: DataFrame,
+    feats: DataFrame,
+    path: str,
+    n_cells: int,
+    n_feats: int,
+) -> str:
+    """Export to an AnnData-compatible ``.h5ad`` (CSR X group + obs/var
+    tables, ``writers.py:1113-1259``) via :func:`write_h5ad`. AnnData's
+    ``obs``/``var`` are positional — row i describes CSR row i — so
+    they are sorted by their (dense) ``cell_id`` / ``feat_id`` before
+    writing, whatever order the upstream plan emits them in."""
+    indptr, indices, data = coo_to_csr_arrays(counts, n_cells, n_feats)
+
+    def _ordered(df, key):
+        pdf = df.toPandas()
+        if key in pdf.columns:
+            pdf = pdf.sort_values(key, kind="stable", ignore_index=True)
+        return pdf
+
+    return write_h5ad(
+        path, indptr, indices, data,
+        _ordered(cells, "cell_id"), _ordered(feats, "feat_id"),
+        n_cells, n_feats,
+    )
 
 
 def compact_parquet(

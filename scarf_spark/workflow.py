@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scarf_spark.operators import normalize, qc
-from scarf_spark.operators.filters import auto_filter_bounds
+from scarf_spark.operators.filters import auto_filter_bound_cols
 
 
 class ScarfDataStore:
@@ -61,12 +61,16 @@ class ScarfDataStore:
             )
         if "I" not in cells.columns:
             cells = cells.withColumn("I", F.lit(True))
-        self.cells = cells
+        # lazy lineage cut at the dimension tables (the _set_cell_cols
+        # pattern): cell- and feature-sized probes — active-cell counts,
+        # HVG id lists, selection hashes — otherwise replay the fact
+        # table's scan and aggregation on every action
+        self.cells = cells.localCheckpoint(eager=False)
         if feats is None:
             feats = self.counts.select("feat_id").distinct()
         if "I" not in feats.columns:
             feats = feats.withColumn("I", F.lit(True))
-        self.feats = feats
+        self.feats = feats.localCheckpoint(eager=False)
         self.edges: DataFrame | None = None
         self.markers: dict[str, DataFrame] = {}
         self._registry = None
@@ -89,12 +93,23 @@ class ScarfDataStore:
 
     def auto_filter_cells(self, attrs: list[str], n_std: float = 2.0) -> "ScarfDataStore":
         """mean ± n_std bounds per attribute (``datastore.py:140-197``),
-        bounds computed distributed, then ANDed into ``I``."""
-        for a in attrs:
-            b = auto_filter_bounds(self.cells, a, n_std).collect()[0]
-            self.cells = self.cells.withColumn(
-                "I", F.col("I") & F.col(a).between(float(b["lo"]), float(b["hi"]))
-            )
+        bounds computed distributed, then ANDed into ``I``. Every
+        attribute's bounds come from ONE aggregate over all cells (not
+        the ``I``-filtered ones, so the attributes do not see each
+        other's filters)."""
+        if not attrs:
+            return self
+        b = self.cells.agg(
+            *[
+                c
+                for i, a in enumerate(attrs)
+                for c in auto_filter_bound_cols(a, n_std, f"lo{i}", f"hi{i}")
+            ]
+        ).collect()[0]
+        pred = F.col("I")
+        for i, a in enumerate(attrs):
+            pred = pred & F.col(a).between(float(b[f"lo{i}"]), float(b[f"hi{i}"]))
+        self.cells = self.cells.withColumn("I", pred).localCheckpoint(eager=False)
         return self
 
     def _active_counts(self) -> DataFrame:
@@ -115,6 +130,7 @@ class ScarfDataStore:
             self.feats.drop("hvgs")
             .join(hvg, "feat_id", "left_outer")
             .withColumn("hvgs", F.coalesce(F.col("hvgs"), F.lit(False)))
+            .localCheckpoint(eager=False)
         )
         return self
 
@@ -135,9 +151,9 @@ class ScarfDataStore:
         reference's param-subtree semantics."""
         from scarf_spark.ml.reduction import (
             assemble_vectors,
-            pca_fit,
+            pca_fit_gram,
             pca_transform,
-            zscore_vectors,
+            zscore_gram,
         )
         from scarf_spark.operators.knn import cosine_knn_sharded, smoothen_dists
 
@@ -158,11 +174,12 @@ class ScarfDataStore:
                 normed = normed.withColumn(
                     "norm_value", F.log1p(F.col("norm_value"))
                 )
-            vec = zscore_vectors(
+            # fused z-score + Gram: one moment pass over the vectors
+            vec, gram, n = zscore_gram(
                 assemble_vectors(normed, feat_ids, "norm_value"),
                 d=len(feat_ids),
             )
-            loadings, _ev = pca_fit(vec, k=dims, d=len(feat_ids))
+            loadings, _ev = pca_fit_gram(gram, n, k=dims)
             red = pca_transform(vec, loadings).select(
                 F.col("cell_id").alias("vec_id"),
                 F.array(
@@ -488,32 +505,32 @@ class ScarfDataStore:
         + obs/var; the vendored pure-python HDF5 writer keeps this
         un-gated). Sparse ids are densified to 0..n−1 first — the CSR
         indptr indexes by position, like the reference's matrix
-        export."""
-        from scarf_spark.sources.sinks import to_h5ad
+        export. The export is driver-bound by definition, so the three
+        tables cross as Arrow batches and the densification runs in
+        numpy (sorted unique ids + ``searchsorted``), with obs/var
+        written in dense-index order."""
+        import numpy as np
+        import pandas as pd
+
+        from scarf_spark.sources.sinks import csr_from_coo, lookup_sorted, write_h5ad
 
         cells = self.cells.where("I")
-        cid = (
-            cells.select("cell_id").orderBy("cell_id")
-            .rdd.map(lambda r: r[0]).zipWithIndex().toDF(["cell_id", "_ci"])
+        obs_cols = [c for c in ("n_counts", "n_features") if c in cells.columns]
+        obs = cells.select("cell_id", *obs_cols).toPandas()
+        obs = obs.sort_values("cell_id", kind="stable", ignore_index=True)
+        cid = obs["cell_id"].to_numpy()
+        fid = np.unique(self.feats.select("feat_id").toPandas()["feat_id"].to_numpy())
+        coo = self.counts.select("cell_id", "feat_id", "value").toPandas()
+        # the id lookup masks out inactive cells — the semi-join of
+        # _active_counts, without its broadcast job
+        ci, c_ok = lookup_sorted(cid, coo["cell_id"].to_numpy())
+        fi, f_ok = lookup_sorted(fid, coo["feat_id"].to_numpy())
+        keep = c_ok & f_ok
+        indptr, indices, data = csr_from_coo(
+            ci[keep], fi[keep], coo["value"].to_numpy()[keep], len(cid)
         )
-        fid = (
-            self.feats.select("feat_id").distinct().orderBy("feat_id")
-            .rdd.map(lambda r: r[0]).zipWithIndex().toDF(["feat_id", "_fi"])
+        obs["cell_id"] = np.arange(len(cid), dtype=np.int64)
+        var = pd.DataFrame({"feat_id": np.arange(len(fid), dtype=np.int64)})
+        return write_h5ad(
+            path, indptr, indices, data, obs, var, len(cid), len(fid)
         )
-        n_cells, n_feats = cid.count(), fid.count()
-        ac = (
-            self._active_counts()
-            .join(cid, "cell_id")
-            .join(F.broadcast(fid), "feat_id")
-            .select(
-                F.col("_ci").alias("cell_id"),
-                F.col("_fi").alias("feat_id"),
-                "value",
-            )
-        )
-        obs = cells.join(cid, "cell_id").select(
-            F.col("_ci").alias("cell_id"),
-            *[c for c in ("n_counts", "n_features") if c in cells.columns],
-        )
-        var = fid.select(F.col("_fi").alias("feat_id"))
-        return to_h5ad(ac, obs, var, path, n_cells=n_cells, n_feats=n_feats)

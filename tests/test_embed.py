@@ -179,3 +179,57 @@ def test_spectral_embedding_partitioning_invariant(spark):
         map(tuple, spectral_embedding(e.repartition(7), dims=2, n_iter=5).collect())
     )
     assert a == b
+
+
+def _ring_graph(spark, extra_edges=()):
+    """12 nodes (ids 3, 13, …, 113), each linked to its +1/+2/+5
+    neighbours on a ring, with seeded initial coordinates."""
+    n = 12
+    rows = [
+        (10 * i + 3, 10 * ((i + j) % n) + 3, round(1.0 / (1.0 + 0.1 * j + 0.01 * i), 6))
+        for i in range(n)
+        for j in (1, 2, 5)
+    ]
+    xy = np.round(np.random.default_rng(5).normal(0.0, 0.5, (n, 2)), 6)
+    edges = spark.createDataFrame(rows + list(extra_edges), "src long, dst long, weight double")
+    init = spark.createDataFrame(
+        [(10 * i + 3, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+        "cell_id long, ix double, iy double",
+    )
+    return edges, init
+
+
+# umap_layout_driver(n_epochs=12, seed=7) on _ring_graph, as computed by
+# the Row-collect implementation this layout must keep reproducing
+_RING_LAYOUT = [
+    (3, 1.275533, 0.921249), (13, 1.1229, -3.661756),
+    (23, -0.150714, -3.890269), (33, 0.246159, -2.459418),
+    (43, -0.659167, -2.88242), (53, 1.062562, -0.357984),
+    (63, 2.725874, -1.321199), (73, 2.068108, -0.253709),
+    (83, 1.464518, -1.820265), (93, -0.740125, -0.725068),
+    (103, 1.122472, -0.771476), (113, -0.07606, 0.365639),
+]
+
+
+def _layout(edges, init):
+    out = embed.umap_layout_driver(edges, init, n_epochs=12, seed=7).collect()
+    return [(r["cell_id"], r["umap1"], r["umap2"]) for r in out]
+
+
+def test_umap_layout_pinned_coordinates(spark):
+    edges, init = _ring_graph(spark)
+    assert _layout(edges, init) == _RING_LAYOUT
+
+
+def test_umap_layout_drops_edges_outside_init(spark):
+    # node 999 has no initial position: its edges cannot be laid out
+    edges, init = _ring_graph(spark, extra_edges=[(13, 999, 0.9), (999, 3, 0.4)])
+    assert _layout(edges, init) == _RING_LAYOUT
+
+
+def test_umap_layout_empty_edges_returns_init(spark):
+    _edges, init = _ring_graph(spark)
+    empty = spark.createDataFrame([], "src long, dst long, weight double")
+    got = _layout(empty, init)
+    want = sorted((r["cell_id"], r["ix"], r["iy"]) for r in init.collect())
+    assert got == want

@@ -233,3 +233,27 @@ def test_to_h5ad_roundtrip_ungated(spark, tmp_path):
 
     with File(path) as f:
         assert [int(x) for x in f["X"]["shape"][:]] == [2, 3]
+
+
+def test_to_h5ad_writes_obs_var_in_index_order(spark, tmp_path):
+    """obs/var are positional in AnnData: rows arriving out of order
+    are written sorted by their dense id."""
+    from scarf_spark.sources.minih5 import File
+    from scarf_spark.sources.sinks import to_h5ad
+
+    counts = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 0, 2.0), (2, 1, 3.0), (2, 0, 4.0)],
+        "cell_id long, feat_id long, value double",
+    )
+    cells = spark.createDataFrame(
+        [(2, 7.0), (0, 1.0), (1, 2.0)], "cell_id long, n_counts double"
+    )
+    feats = spark.createDataFrame([(1,), (0,)], "feat_id long")
+    path = str(tmp_path / "order.h5ad")
+    to_h5ad(counts, cells, feats, path, n_cells=3, n_feats=2)
+    with File(path) as f:
+        assert [int(v) for v in f["obs"]["cell_id"][:]] == [0, 1, 2]
+        assert [float(v) for v in f["obs"]["n_counts"][:]] == [1.0, 2.0, 7.0]
+        assert [int(v) for v in f["var"]["feat_id"][:]] == [0, 1]
+        assert [int(v) for v in f["X"]["indptr"][:]] == [0, 1, 2, 4]
+        assert [int(v) for v in f["X"]["indices"][:]] == [1, 0, 0, 1]

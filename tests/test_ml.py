@@ -365,3 +365,50 @@ def test_zscore_gram_extreme_offset_falls_back_to_two_pass(spark):
     assert a == b  # z params identical regardless of the Gram path
     assert np.allclose(load_ref, load_f, atol=1e-9)
     assert np.allclose(ev_ref, ev_f, atol=1e-9)
+
+
+def _vec_table(spark, x, n_partitions):
+    rows = [(i, [float(v) for v in row]) for i, row in enumerate(x)]
+    return spark.sparkContext.parallelize(rows, n_partitions).toDF(
+        "cell_id long, v array<double>"
+    )
+
+
+@pytest.mark.parametrize(
+    "n_rows, n_partitions",
+    [(5, 12), (1, 1), (1, 4)],
+    ids=["empty-partitions", "one-row", "one-row-empty-partitions"],
+)
+def test_gram_moments_edge_partitions(spark, n_rows, n_partitions):
+    """The Arrow-batched moment pass behind pca_fit / zscore_vectors /
+    zscore_gram on a table with empty partitions and on a one-row
+    table: n, the means and the Gram equal numpy's X.T @ X."""
+    d = 4
+    x = np.random.default_rng(3).normal(0.5, 1.0, (n_rows, d))
+    vec = _vec_table(spark, x, n_partitions)
+    assert vec.rdd.getNumPartitions() == n_partitions
+
+    n, s, g = reduction._gram_moments(vec, d)
+    assert n == n_rows
+    assert np.allclose(s / n, x.mean(axis=0), rtol=0, atol=1e-12)
+    assert np.allclose(g, x.T @ x, rtol=0, atol=1e-12)
+
+    # pca_fit over all d components reconstructs X'X / max(n - 1, 1)
+    load, ev = reduction.pca_fit(vec, k=d, d=d)
+    cov = x.T @ x / max(n_rows - 1, 1)
+    assert np.allclose(load @ np.diag(ev) @ load.T, cov, rtol=0, atol=1e-12)
+
+    # z-scores: population mean / sd, sd floored at 1e-6 (the 1e-12
+    # variance floor) — one row z-scores to all zeros
+    mu = x.mean(axis=0)
+    sd = np.sqrt(np.maximum((x * x).mean(axis=0) - mu * mu, 1e-12))
+    want_z = (x - mu) / sd
+    z = reduction.zscore_vectors(vec, d=d).toPandas().sort_values("cell_id")
+    got_z = np.stack(z["v"].to_numpy())
+    assert np.allclose(got_z, want_z, rtol=0, atol=1e-12)
+
+    z_f, gram, n_f = reduction.zscore_gram(vec, d=d)
+    assert n_f == n_rows
+    got_zf = np.stack(z_f.toPandas().sort_values("cell_id")["v"].to_numpy())
+    assert np.array_equal(got_zf, got_z)  # same z expressions as zscore_vectors
+    assert np.allclose(np.array(gram), want_z.T @ want_z, rtol=0, atol=1e-12)

@@ -2,6 +2,7 @@
 filter → HVG → graph → cluster → UMAP → markers, plus registry
 memoization of the graph build."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -128,3 +129,72 @@ def test_round9_reference_surface(wf, tmp_path):
     out = wf.to_anndata(str(tmp_path / "export.h5ad"))
     import os
     assert os.path.getsize(out) > 0
+
+
+def _jobs_in_group(spark, group: str, action):
+    """Run ``action`` under a job group and return how many Spark jobs
+    it submitted (counted once the listener bus has caught up)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hvg_probe_does_not_replay_fact_table(spark, sf_dir):
+    """feats is checkpointed after mark_hvgs: a repeated HVG probe reads
+    the feature-sized table, not the fact table's lineage."""
+    ds = ScarfDataStore(spark, sf_dir=sf_dir)
+    ds.mark_hvgs(top_n=10)
+    first = ds.feats.where("hvgs").collect()
+    again, n_jobs = _jobs_in_group(
+        spark, "hvg-probe", lambda: ds.feats.where("hvgs").collect()
+    )
+    assert sorted(again) == sorted(first) and len(first) == 10
+    assert n_jobs <= 2, f"repeated HVG probe ran {n_jobs} jobs"
+
+
+def test_auto_filter_cells_matches_per_attribute_bounds(spark, sf_dir):
+    """The one-aggregate auto_filter_cells gives the same I mask as
+    ANDing auto_filter_bounds of each attribute over all cells."""
+    from scarf_spark.operators.filters import auto_filter_bounds
+
+    attrs = ["n_counts", "n_features"]
+    ds = ScarfDataStore(spark, sf_dir=sf_dir)
+    base = ds.cells
+    ds.auto_filter_cells(attrs, n_std=1.0)
+    want = base
+    for a in attrs:
+        b = auto_filter_bounds(base, a, 1.0).collect()[0]
+        want = want.withColumn(
+            "I", F.col("I") & F.col(a).between(float(b["lo"]), float(b["hi"]))
+        )
+    got = dict(ds.cells.select("cell_id", "I").collect())
+    exp = dict(want.select("cell_id", "I").collect())
+    assert got == exp
+    assert 0 < sum(exp.values()) < len(exp)  # the bounds do filter
+
+
+def test_to_anndata_obs_rows_match_matrix_rows(spark, sf_dir, tmp_path):
+    """AnnData obs is positional: row i must describe CSR row i."""
+    from scarf_spark.sources import minih5
+
+    ds = ScarfDataStore(spark, sf_dir=sf_dir)
+    ds.auto_filter_cells(["n_counts"], n_std=1.0)
+    path = ds.to_anndata(str(tmp_path / "ordered.h5ad"))
+    with minih5.File(path) as f:
+        indptr = f["X"]["indptr"][:]
+        data = f["X"]["data"][:]
+        cell_id = f["obs"]["cell_id"][:]
+        n_counts = f["obs"]["n_counts"][:]
+        feat_id = f["var"]["feat_id"][:]
+    n = len(indptr) - 1
+    assert n == ds.cells.where("I").count()
+    assert np.array_equal(cell_id, np.arange(n))
+    assert np.array_equal(feat_id, np.arange(len(feat_id)))
+    row_sums = np.array([data[indptr[i] : indptr[i + 1]].sum() for i in range(n)])
+    assert np.allclose(n_counts, row_sums, rtol=0, atol=1e-9)
